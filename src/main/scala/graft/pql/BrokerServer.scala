@@ -455,12 +455,9 @@ object BrokerServer {
         pool.foreach(p =>
           spark.sparkContext.setLocalProperty("spark.scheduler.pool", p))
         try {
-          val df = Pql.toDataFrame(q, Tables.load(spark, tableDir, _))
-          val body = timeoutMs match {
-            case None => BrokerResponse.render(q, df, preserve, trace)
-            case Some(ms) => renderWithTimeout(spark, q, df, ms, preserve, trace)
-          }
-          withTime(body)
+          def answer(): String = BrokerResponse.render(q,
+            Pql.toDataFrame(q, Tables.load(spark, tableDir, _)), preserve, trace)
+          withTime(timeoutMs.fold(answer())(ms => withTimeout(spark, ms)(answer())))
         } catch {
           case _: TimeoutException =>
             withTime(exceptionJson(ExecutionTimeoutErrorCode,
@@ -473,30 +470,32 @@ object BrokerServer {
     }
   }
 
-  /** Execute under a cancellable job group with a deadline — the
-    * reference's broker timeout. interruptOnCancel interrupts running
-    * tasks; the waiting thread gets a TimeoutException. */
-  private def renderWithTimeout(spark: SparkSession, q: Pql.Query,
-      df: org.apache.spark.sql.DataFrame, ms: Long,
-      preserveType: Boolean, trace: Boolean = false): String = {
+  /** Compile and render under a cancellable job group with a deadline
+    * — the reference's broker timeout. Compile is inside the deadline
+    * because eager operators (`Percentiles.rankSelect` passes, a
+    * schema inference on a cache miss) run jobs there. At the deadline
+    * the group's running jobs are cancelled (interruptOnCancel
+    * interrupts their tasks) and its future jobs refused, so a pass
+    * launched after the deadline cannot run either; the waiting thread
+    * gets a TimeoutException. Any other failure is rethrown as is, so
+    * its message matches the no-timeout path. */
+  private def withTimeout[T](spark: SparkSession, ms: Long)(body: => T): T = {
     val group = s"graft-broker-${java.util.UUID.randomUUID()}"
     val pool = Executors.newSingleThreadExecutor()
     try {
-      val fut = pool.submit(new java.util.concurrent.Callable[String] {
-        def call(): String = {
+      val fut = pool.submit(new java.util.concurrent.Callable[T] {
+        def call(): T = {
           spark.sparkContext.setJobGroup(group, s"broker pql (timeout ${ms}ms)",
             interruptOnCancel = true)
-          try BrokerResponse.render(q, df, preserveType, trace)
-          finally spark.sparkContext.clearJobGroup()
+          try body finally spark.sparkContext.clearJobGroup()
         }
       })
       try fut.get(ms, TimeUnit.MILLISECONDS)
       catch {
         case e: TimeoutException =>
-          spark.sparkContext.cancelJobGroup(group)
+          spark.sparkContext.cancelJobGroupAndFutureJobs(group)
           throw e
-        case e: java.util.concurrent.ExecutionException =>
-          throw new RuntimeException(e.getCause)
+        case e: java.util.concurrent.ExecutionException => throw e.getCause
       }
     } finally pool.shutdownNow()
   }

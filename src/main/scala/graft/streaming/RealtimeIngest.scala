@@ -114,9 +114,10 @@ object RealtimeIngest {
         .dropDuplicatesWithinWatermark(keyCols),
       segmentDir, checkpointDir, trigger)
 
-  /** Read the committed segments back as a queryable table. */
+  /** Read the committed segments back as a queryable table, through
+    * the session's schema cache ([[graft.sources.Tables.read]]). */
   def readSegments(spark: SparkSession, segmentDir: String): DataFrame =
-    spark.read.parquet(segmentDir)
+    graft.sources.Tables.read(spark, segmentDir)
 }
 
 /** Hybrid table: one logical table answered from OFFLINE segments up

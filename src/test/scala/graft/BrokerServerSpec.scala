@@ -308,4 +308,49 @@ class BrokerServerSpec extends SparkSpec {
       assert(ok.contains("\"aggregationResults\""), ok.take(300))
     } finally broker.stop()
   }
+
+  private def post(port: Int, pql: String): String =
+    http("POST", s"http://127.0.0.1:$port/query", Some(s"""{"pql": "$pql"}"""))
+
+  private def withoutTime(json: String): String =
+    json.replaceAll(""""timeUsedMs": \d+""", "")
+
+  test("OPTION(timeoutMs) covers compile: eager percentile passes are cancelled") {
+    val broker = new BrokerServer(spark, sfDir)
+    val port = broker.start()
+    try {
+      // PERCENTILE50 compiles to Percentiles.rankSelect, whose narrowing
+      // passes run as jobs inside Pql.toDataFrame
+      val (out, jobs) = JobLog.during(spark.sparkContext)(post(port,
+        "SELECT PERCENTILE50(l_extendedprice) FROM lineitem OPTION(timeoutMs=1)"))
+      assert(out.contains("\"errorCode\": 250"), out.take(300))
+      // a job launched for the request ran in its group and was
+      // cancelled; the passes after the deadline were refused outright
+      assert(jobs.forall(j => j.group.exists(_.startsWith("graft-broker-")) &&
+        j.succeeded.contains(false)), jobs)
+      // errors under a deadline read exactly as they do without one
+      val bad = "SELECT SUM(no_such_column) FROM lineitem"
+      val plain = post(port, bad)
+      assert(plain.contains("\"errorCode\": 200"), plain.take(300))
+      assert(withoutTime(post(port, s"$bad OPTION(timeoutMs=60000)")) ===
+        withoutTime(plain))
+    } finally broker.stop()
+  }
+
+  test("a repeated statement runs a pinned number of jobs, none in Tables.load") {
+    val broker = new BrokerServer(spark, sfDir)
+    val port = broker.start()
+    try {
+      val pql = "SELECT SUM(l_quantity) FROM lineitem WHERE l_returnflag = 'R'"
+      val (first, _) = JobLog.during(spark.sparkContext)(post(port, pql))
+      assert(first.contains("\"aggregationResults\""), first.take(300))
+      (1 to 2).foreach { i =>
+        val (again, jobs) = JobLog.during(spark.sparkContext)(post(port, pql))
+        assert(withoutTime(again) === withoutTime(first))
+        // the measured count: the aggregate's shuffle stage and its
+        // final stage; a schema inference per request would add one
+        assert(jobs.size === 2, s"request ${i + 1}: $jobs")
+      }
+    } finally broker.stop()
+  }
 }
